@@ -169,12 +169,16 @@ def clean_mime_type(orig: str | None) -> str | None:
     return orig.split(";")[0]
 
 
+# ASCII whitespace trimmed off header spellings — one set for both twins
+_HEADER_WS = " \t\r\n\x0b\f"
+
+
 def for_name(name: str | None) -> str | None:
     """MimeTypes.forName against the in-repo registry: canonical name
     for known spellings (case/whitespace-insensitive), else None."""
     if not name:
         return None
-    return KNOWN_NAMES.get(name.strip().lower())
+    return KNOWN_NAMES.get(name.strip(_HEADER_WS).lower())
 
 
 def mime_type_from_url(url: str | None) -> str:
@@ -275,7 +279,12 @@ def _map_lookup(table: dict, key: Column) -> Column:
 def header_mime_col(content_type: Column) -> Column:
     """cleanMimeType + forName as one expression: canonical name for
     known header spellings, NULL otherwise."""
-    cleaned = F.lower(F.trim(F.substring_index(content_type, ";", 1)))
+    # trims exactly _HEADER_WS, as for_name does
+    cleaned = F.lower(F.regexp_replace(
+        F.substring_index(content_type, ";", 1),
+        r"^[ \t\r\n\x0B\f]+|[ \t\r\n\x0B\f]+\z",
+        "",
+    ))
     return _map_lookup(KNOWN_NAMES, cleaned)
 
 

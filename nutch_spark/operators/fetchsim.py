@@ -43,7 +43,7 @@ from nutch_spark.schema import (
     STATUS_FETCH_SUCCESS,
     STATUS_LINKED,
 )
-from nutch_spark.urls.urlutil import choose_repr, host_col
+from nutch_spark.urls.urlutil import choose_repr, domain_expr, host_expr
 
 from nutch_spark.schema import EMPTY_META_EXPR as _EMPTY_MAP
 
@@ -86,7 +86,7 @@ def attach_queue(df: DataFrame, cfg: NutchConfig, dns: DataFrame | None) -> Data
     ``fetcher.queue.mode`` (FetchItem.create, fetcher/FetchItem.java:87-121).
     Robots rules stay host-keyed in every mode, so ``host`` is the real
     host and ``_queue`` the politeness unit."""
-    df = df.withColumn("host", host_col(F.col("url")))
+    df = df.withColumn("host", host_expr(F.col("url")))
     if cfg.fetcher_queue_mode == "byIP":
         if dns is None:
             raise ValueError("fetcher.queue.mode=byIP requires a dns fixture (host, ip)")
@@ -99,8 +99,6 @@ def attach_queue(df: DataFrame, cfg: NutchConfig, dns: DataFrame | None) -> Data
         # (FetchItem.java:101-104)
         return df.filter(F.col("_queue").isNotNull())
     if cfg.fetcher_queue_mode == "byDomain":
-        from nutch_spark.urls.urlutil import domain_expr
-
         return df.withColumn("_queue", domain_expr(F.col("url")))
     return df.withColumn("_queue", F.col("host"))
 
@@ -715,7 +713,7 @@ def fetch_follow_outlinks(
         if cfg.fetcher_follow_outlinks_ignore_external:
             # host check against the source url (:859-865), independent
             # of the queue mode
-            cands = cands.filter(host_col(F.col("url")) == host_col(F.col("to_url")))
+            cands = cands.filter(host_expr(F.col("url")) == host_expr(F.col("to_url")))
 
         events = cands.select(
             "_queue",

@@ -50,9 +50,7 @@ from nutch_spark.schema import STATUS_DB_UNFETCHED
 from nutch_spark.urls.filters import url_filter_cond
 from nutch_spark.urls.urlutil import (
     domain_expr,
-    domain_udf,
     host_expr,
-    host_udf,
     partition_hash_udf,
     url_hash32_udf,
 )
@@ -127,19 +125,9 @@ def select_eligible(
 
 
 def _host_key(cfg: NutchConfig) -> F.Column:
-    # HOT-PATH NOTE (A/B at 20M urls, local[4], BENCH/MEASUREMENT_LOG.md
-    # 2026-08-18): the pandas twin beats host_expr here — 37s vs 52s for
-    # the whole generate stage. host_key feeds .filter(isNotNull) plus
-    # two window keys; Catalyst clones the inlined regexp_extract through
-    # the pushed-down filter (and nullif() doubles it again per CASE
-    # expansion), so the "codegen" regex runs up to 4x per row, while an
-    # ArrowEvalPython node is a cloning barrier: one C-level pandas regex
-    # pass per batch, materialized once. host_expr/domain_expr remain the
-    # right choice where the value is consumed once (fetch queue key,
-    # dedup/webgraph/stats domains) or feeds a pandas UDF input.
     if cfg.generate_count_mode == "domain" and cfg.generate_max_count != -1:
-        return F.lower(domain_udf()(F.col("url")))
-    return F.lower(host_udf()(F.col("url")))
+        return domain_expr(F.col("url"))
+    return host_expr(F.col("url"))
 
 
 def apply_quota_windowed(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from nutch_spark.operators.parse import span_signature
 from nutch_spark.schema import STATUS_FETCH_SUCCESS
+from nutch_spark.urls.urlutil import host_expr
 
 CRLF = "\r\n"
 
@@ -155,9 +156,7 @@ def commoncrawl_records(
     response.body is the parse text. Deviation (documented): timestamps
     are the epoch-ms fetch_time under the injected-clock rule, not
     wall-clock import time."""
-    from nutch_spark.urls.urlutil import host_col
-
-    host = host_col(F.col("url"))
+    host = host_expr(F.col("url"))
     path = F.regexp_replace(F.col("url"), r"^[a-z]+://[^/]*", "")
     key = F.concat(
         F.lit(key_prefix), reverse_host(host), F.lit(":http"), path

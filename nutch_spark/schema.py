@@ -65,16 +65,6 @@ STATUS_NAMES = {
 }
 
 
-def has_db_status(status: int) -> bool:
-    """CrawlDatum.hasDbStatus — status in the DB byte range (≤ 0x1f)."""
-    return 0 < status <= 0x1F
-
-
-def has_fetch_status(status: int) -> bool:
-    """CrawlDatum.hasFetchStatus — status in the fetch byte range."""
-    return 0x20 <= status <= 0x3F
-
-
 # Metadata keys (metadata/Nutch.java:33-86). The two hot ones are hoisted
 # to typed columns; the rest live in the open string->string metadata map.
 META_GENERATE_TIME = "_ngt_"
@@ -103,46 +93,6 @@ def crawldb_schema() -> T.StructType:
             T.StructField("metadata", T.MapType(T.StringType(), T.StringType()), True),
             T.StructField("gen_time", T.LongType(), True),
             T.StructField("repr_url", T.StringType(), True),
-        ]
-    )
-
-
-def segment_datum_schema() -> T.StructType:
-    """crawl_fetch / crawl_parse rows: a crawldb row + segment_id + anchor.
-
-    ``anchor`` only populated on STATUS_LINKED rows (the outlink anchor
-    text carried into LinkDb, parse/ParseOutputFormat.java:319-358).
-    """
-    base = crawldb_schema()
-    return T.StructType(
-        list(base.fields)
-        + [
-            T.StructField("segment_id", T.StringType(), True),
-            T.StructField("anchor", T.StringType(), True),
-        ]
-    )
-
-
-def spans_schema() -> T.ArrayType:
-    """The interleaved text+media document payload (BASELINE.json input_hint)."""
-    return T.ArrayType(
-        T.StructType(
-            [
-                T.StructField("kind", T.StringType(), True),
-                T.StructField("text", T.StringType(), True),
-                T.StructField("media_ref", T.StringType(), True),
-                T.StructField("offset", T.IntegerType(), True),
-            ]
-        )
-    )
-
-
-def docs_schema() -> T.StructType:
-    """The fetchable corpus: doc_id (canonical URL) -> ordered spans."""
-    return T.StructType(
-        [
-            T.StructField("doc_id", T.StringType(), False),
-            T.StructField("spans", spans_schema(), True),
         ]
     )
 

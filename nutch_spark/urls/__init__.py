@@ -11,7 +11,6 @@ from nutch_spark.urls.urlutil import (  # noqa: F401
     get_domain,
     get_host,
     host_expr,
-    host_udf,
     java_hashcode_expr,
     java_string_hashcode,
     nutch_url_hash32,

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from nutch_spark.urls.urlutil import get_host, host_expr
+
 # conf/regex-urlfilter.txt.template (comment/blank lines removed)
 DEFAULT_RULES: list[str] = [
     r"-^(?:file|ftp|mailto):",
@@ -65,10 +67,6 @@ class RegexURLFilter:
 
 def default_filter() -> RegexURLFilter:
     return RegexURLFilter(DEFAULT_RULES)
-
-
-def crawl_filter() -> RegexURLFilter:
-    return RegexURLFilter(CRAWL_RULES)
 
 
 class PrefixURLFilter:
@@ -182,18 +180,15 @@ def url_filter_cond(url_col: Column, rules: Sequence[str] | None = None) -> Colu
     return cond.otherwise(F.lit(False))  # no match => reject
 
 
-def _host_suffixes(url_col: Column) -> Column:
-    """Array of the url host and all its ancestor domains
-    (``a.b.c.com`` -> [a.b.c.com, b.c.com, c.com, com]); empty array
-    for unparseable/null hosts. Pure JVM."""
-    host = F.lower(F.try_parse_url(url_col, F.lit("HOST")))
+def _host_suffixes(host: Column) -> Column:
+    """Array of a host and all its ancestor domains
+    (``a.b.c.com`` -> [a.b.c.com, b.c.com, c.com, com]). Pure JVM."""
     parts = F.split(host, r"\.")
     n = F.size(parts)
-    sufs = F.transform(
+    return F.transform(
         F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
         lambda i: F.concat_ws(".", F.slice(parts, i, n)),
     )
-    return F.when(host.isNull() | (host == ""), F.array().cast("array<string>")).otherwise(sufs)
 
 
 class DomainURLFilter:
@@ -220,24 +215,19 @@ class DomainURLFilter:
     def cond(self, url_col: Column) -> Column:
         if not self._set:
             return F.lit(True)  # no entries => filter inactive
-        host = F.lower(F.try_parse_url(url_col, F.lit("HOST")))
-        bad = host.isNull() | (host == "")  # unparseable => reject (ref: exception => null)
+        host = host_expr(url_col)
         hit = F.coalesce(
             F.arrays_overlap(
-                _host_suffixes(url_col), F.array(*[F.lit(d) for d in sorted(self._set)])
+                _host_suffixes(host), F.array(*[F.lit(d) for d in sorted(self._set)])
             ),
             F.lit(False),
         )
-        return F.when(bad, F.lit(False)).otherwise(~hit if self._deny else hit)
+        # unparseable => reject (ref: exception => null)
+        return F.when(host.isNull(), F.lit(False)).otherwise(~hit if self._deny else hit)
 
     def accept(self, url: str | None) -> bool:
         """Python twin (tests / driver-side checks)."""
-        if url is None:
-            return False
-        m = re.match(r"^[a-z][a-z0-9+.-]*://([^/?#]*)", url, re.I)
-        auth = m.group(1) if m else ""
-        # strip userinfo and port like parse_url(.., 'HOST') does
-        host = auth.rsplit("@", 1)[-1].split(":", 1)[0].lower()
+        host = get_host(url)
         if not host:
             return False  # unparseable => reject, both modes
         parts = host.split(".")
@@ -291,7 +281,7 @@ class FastURLFilter:
         parseable = F.coalesce(
             url_col.rlike(r"^[a-zA-Z][a-zA-Z0-9+.-]*://"), F.lit(False)
         )
-        host = F.lower(F.try_parse_url(url_col, F.lit("HOST")))
+        host = host_expr(url_col)
         after = F.regexp_replace(url_col, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", "")
         path = F.regexp_extract(after, r"^([^?#]*)", 1)
         pathquery = F.regexp_extract(after, r"^([^#]*)", 1)
@@ -315,11 +305,11 @@ class FastURLFilter:
         """Python twin of :meth:`cond` for tests."""
         if url is None:
             return False
-        m = re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]*)(.*)$", url)
+        m = re.match(r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(.*)$", url)
         if not m:
             return False  # unparseable => reject, matching cond()
-        host = m.group(1).rsplit("@", 1)[-1].split(":", 1)[0].lower()
-        rest = m.group(2)
+        host = get_host(url) or ""  # no host: no Host/Domain scope applies
+        rest = m.group(1)
         path = re.match(r"^([^?#]*)", rest).group(1)
         pathquery = re.match(r"^([^#]*)", rest).group(1)
         for kind, name, target, rx in self._rules:

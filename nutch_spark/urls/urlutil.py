@@ -31,7 +31,10 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-_HOST_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/?#@]*@)?([^/?#:]*)")
+# java.net.URL authority split: userinfo up to '@', then a bracketed IPv6
+# literal kept whole (brackets included, as URL.getHost returns it) or a
+# plain host up to the port colon; an unclosed '[' is no host at all
+_HOST_RE = re.compile(r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/?#@]*@)?(\[[^\]/?#]*\]|(?!\[)[^/?#:]*)")
 _IP_RE = re.compile(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$")
 
 # Minimal public-suffix set: generic TLDs + the two-level suffixes used in
@@ -101,19 +104,6 @@ def get_tld(url_or_host: str | None) -> str | None:
         if idx < 0:
             return candidate
         candidate = sub
-
-
-def tld_udf():
-    """get_tld with the same unique-host batch cache as domain_udf."""
-
-    @F.pandas_udf("string")
-    def _tld(urls: pd.Series) -> pd.Series:
-        has_scheme = urls.str.contains("://", regex=False, na=False)
-        hosts = host_series(urls).where(has_scheme, urls)
-        table = {h: get_tld(h) for h in hosts.dropna().unique()}
-        return hosts.map(table)
-
-    return _tld
 
 
 def choose_repr(src: str, dst: str, temp: bool) -> str:
@@ -197,36 +187,6 @@ def partition_index(key: str, seed: int, num_partitions: int) -> int:
 # ---------------------------------------------------------------------------
 
 
-def host_series(urls: pd.Series) -> pd.Series:
-    """Vectorized get_host: one C-level regex pass over the batch."""
-    h = urls.str.extract(_HOST_RE, expand=False).str.lower()
-    return h.where(h.notna() & (h != ""), None)
-
-
-def host_udf():
-    @F.pandas_udf("string")
-    def _host(urls: pd.Series) -> pd.Series:
-        return host_series(urls)
-
-    return _host
-
-
-def domain_udf():
-    """get_domain via vectorized host extraction + per-batch unique-HOST
-    cache: one C-level regex pass pulls the hosts, and the Python suffix
-    walk runs once per distinct host (not once per URL — fetch lists are
-    all-distinct URLs but only a few thousand hosts)."""
-
-    @F.pandas_udf("string")
-    def _domain(urls: pd.Series) -> pd.Series:
-        has_scheme = urls.str.contains("://", regex=False, na=False)
-        hosts = host_series(urls).where(has_scheme, urls)
-        table = {h: get_domain(h) for h in hosts.dropna().unique()}
-        return hosts.map(table)
-
-    return _domain
-
-
 def nutch_url_hash32_series(urls: pd.Series) -> pd.Series:
     """Vectorized HashComparator hash: group URLs by byte length, run
     the signed-byte Horner loop column-wise in numpy with int32
@@ -275,15 +235,6 @@ def partition_hash_udf(seed: int, num_partitions: int):
         return keys.map(lambda k: table[k] if k is not None else default).astype("int32")
 
     return _p
-
-
-def host_col(url_col: Column) -> Column:
-    """JVM-side host extraction for the common scheme://host/path shape.
-
-    Used on hot paths where the full URLUtil semantics aren't needed:
-    ``parse_url`` runs in the JVM (no Python round-trip).
-    """
-    return F.lower(F.try_parse_url(url_col, F.lit("HOST")))
 
 
 # ---------------------------------------------------------------------------
@@ -388,18 +339,15 @@ def partition_expr(key_col: Column, seed: int, num_partitions: int) -> Column:
     ).cast("int")
 
 
-# Java twin of _HOST_RE — the character classes are dialect-neutral, and
-# regexp_extract's find() is anchored by the leading '^'
-_HOST_RE_JAVA = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://(?:[^/?#@]*@)?([^/?#:]*)"
-
-
 def host_expr(url_col: Column) -> Column:
     """Exact JVM twin of ``get_host`` (whole-stage codegen, no Python).
 
     regexp_extract returns '' both for no-match and for an empty host
     capture; get_host maps both to None — nullif folds them together.
+    ``_HOST_RE``'s constructs mean the same in Java, and regexp_extract's
+    find() is anchored by the leading '^'.
     """
-    return F.nullif(F.lower(F.regexp_extract(url_col, _HOST_RE_JAVA, 1)), F.lit(""))
+    return F.nullif(F.lower(F.regexp_extract(url_col, _HOST_RE.pattern, 1)), F.lit(""))
 
 
 # Python's `$` in _IP_RE also matches just before one trailing '\n'

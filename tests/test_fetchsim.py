@@ -353,3 +353,40 @@ def test_bydomain_queue_robots_stay_host_keyed(spark):
     assert abs(a - b) == 100 + 5000
     # the other domain runs on its own (parallel) clock
     assert rows["http://other.example.org/doc/1"]["fetch_time"] == NOW
+
+
+def test_underscore_hosts_get_their_own_queue_and_robots(spark):
+    """java.net.URL.getHost keeps '_' hosts (URLUtil.getHost): fetch must
+    key each one's politeness queue and robots rules on that host — the
+    same key generate caps on — not fold them into one NULL host, and
+    the URL filter's JVM condition must agree with its Python twin."""
+    from nutch_spark.operators.fetchsim import attach_queue
+    from nutch_spark.operators.generate import _host_key
+    from nutch_spark.urls.filters import DomainURLFilter
+
+    urls = ["http://h_x.com/private", "http://h_x.com/doc", "http://h_y.com/doc"]
+    fl = fetchlist(spark, urls)
+    out = outcomes_df(spark, [(u, "success", None, 100) for u in urls])
+    robots = robots_df(spark, [("h_x.com", ["/private"], None, False, False)])
+    cf, _ = fetch(fl, robots, out, CFG, NOW)
+    rows = {r["url"]: r for r in cf.collect()}
+    assert rows["http://h_x.com/private"]["status"] == S.STATUS_FETCH_GONE
+    assert rows["http://h_x.com/doc"]["status"] == S.STATUS_FETCH_SUCCESS
+    assert rows["http://h_y.com/doc"]["status"] == S.STATUS_FETCH_SUCCESS
+    # two hosts, two parallel clocks
+    assert rows["http://h_y.com/doc"]["fetch_time"] == NOW
+
+    queues = attach_queue(fl, CFG, None).select(
+        "url", "_queue", _host_key(CFG).alias("host_key")
+    ).collect()
+    assert {r["url"]: r["_queue"] for r in queues} == {
+        "http://h_x.com/private": "h_x.com",
+        "http://h_x.com/doc": "h_x.com",
+        "http://h_y.com/doc": "h_y.com",
+    }
+    assert all(r["_queue"] == r["host_key"] for r in queues)
+
+    dom = DomainURLFilter(["h_x.com"])
+    one = spark.createDataFrame([("http://h_x.com/",)], "url string")
+    assert one.select(dom.cond(F.col("url"))).first()[0] is dom.accept("http://h_x.com/")
+    assert dom.accept("http://h_x.com/") is True

@@ -141,6 +141,7 @@ FIXTURES = [
     (None, URL_PREFIX + "p", b"PK\x03\x04zipfile"),
     ("image/png", URL_PREFIX + "i.png", b"\x89PNG\r\n\x1a\nrest"),
     ("text/html", URL_PREFIX + "h", b"\x00\x01\x02\x03"),
+    ("text/html\t", URL_PREFIX + "t", b"\x00\x01tab-padded"),
     (None, URL_PREFIX + "n", b""),
     (None, URL_PREFIX + "n.txt", None),
     ("application/octet-stream", URL_PREFIX + "o.csv", b"a,b\n1,2\n"),

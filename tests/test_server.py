@@ -264,6 +264,14 @@ def test_db_crawldb_end_to_end(spark, tmp_path):
         assert code == 400
         code, _ = _post(base, "/db/crawldb", {"crawlId": "/", "type": "stats"})
         assert code == 400
+        # Hadoop glob patterns expand after the check — rejected outright,
+        # even when the pattern would only match paths under the root
+        for glob in ("{..}/{..}/etc", "crawl/*", "crawl/crawld?",
+                     "crawl/[c]rawldb", "crawl/crawldb,/etc"):
+            code, _ = _post(base, "/reader/sequence/read", {"path": glob})
+            assert code == 400, glob
+        code, _ = _post(base, "/db/crawldb", {"crawlId": "{..}", "type": "stats"})
+        assert code == 400
         # relative path under the root still resolves
         code, out = _post(
             base, "/reader/sequence/read?count=true", {"path": "crawl/crawldb"}

@@ -5,6 +5,8 @@ keys and webgraph/indexer domains, so any divergence re-keys politeness
 or dedup groups silently."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from nutch_spark.urls.urlutil import (
@@ -48,7 +50,26 @@ URLS = [
     None,
     "http://a.com/x\n",                        # newline in path
     "http://ünïcode.example.com/x",            # non-ASCII host
+    "http://h_x.com/a",                        # underscore host
+    "http://bücher.de/x",                      # IDN host, not punycoded
+    "http://h.com%2F/",                        # percent stays in the host
+    "http://a\\b.com/",                        # backslash is a host char
+    "http://[::1]/a",                          # IPv6 literal keeps brackets
+    "http://[::1]:8080/a",                     # IPv6 literal + port
+    "http://u@[::1]/",                         # userinfo + IPv6 literal
 ]
+
+# java.net.URL(u).getHost().toLowerCase() — URLUtil.getHost — for the
+# inputs where URI-style parsers (parse_url) disagree with it
+JAVA_URL_HOSTS = {
+    "http://h_x.com/a": "h_x.com",
+    "http://bücher.de/x": "bücher.de",
+    "http://h.com%2F/": "h.com%2f",
+    "http://a\\b.com/": "a\\b.com",
+    "http://[::1]/a": "[::1]",
+    "http://[::1]:8080/a": "[::1]",
+    "http://u@[::1]/": "[::1]",
+}
 
 # domain_expr also accepts bare hosts (no ://) like get_domain does
 HOSTS = [
@@ -113,6 +134,29 @@ def test_host_expr_matches_get_host(spark):
     df = spark.createDataFrame([(u,) for u in URLS], "url string")
     rows = df.select("url", host_expr(F.col("url")).alias("h")).collect()
     for r in rows:
+        assert r["h"] == get_host(r["url"]), repr(r["url"])
+    for url, host in JAVA_URL_HOSTS.items():
+        assert get_host(url) == host, url
+
+
+# the characters where host parsers part ways: '_', non-ASCII, '%',
+# '\', IPv6 brackets, the port colon and the userinfo '@'
+_HOST_ALPHABET = list("aZ09.-_%\\[]:@/?#") + ["ü", "É", "日"]
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(
+    st.builds(
+        lambda scheme, rest: scheme + rest,
+        st.sampled_from(["http://", "HTTPS://", "ftp+x://", ""]),
+        st.text(alphabet=_HOST_ALPHABET, max_size=16),
+    ),
+    min_size=1,
+    max_size=30,
+))
+def test_prop_host_expr_matches_get_host(spark, urls):
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    for r in df.select("url", host_expr(F.col("url")).alias("h")).collect():
         assert r["h"] == get_host(r["url"]), repr(r["url"])
 
 

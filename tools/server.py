@@ -205,7 +205,11 @@ class NutchServerState:
     def _confined(self, path: str) -> str:
         """Resolve ``path`` (relative paths against data_root) and
         reject anything escaping data_root — symlinks and ``..``
-        included, since resolve() normalizes both."""
+        included, since resolve() normalizes both. Hadoop glob
+        characters are rejected first: Spark expands ``{..}/{..}/etc``
+        or ``*`` after this check, to paths it never saw."""
+        if any(c in path for c in "{}[]*?,"):
+            raise ValueError(f"glob characters in path: {path!r}")
         p = Path(path)
         if not p.is_absolute():
             p = self.data_root / p
